@@ -11,7 +11,9 @@ Four tiers, cheapest to most semantic:
 3. ``minhash_lsh_pairs`` — MinHash signatures + banded LSH. The scale
    path: candidate pairs only ever co-group within a (band, bucket)
    key, so the shuffle is linear in corpus size. Probabilistic;
-   optionally verified with exact Jaccard on the candidates.
+   optionally verified with exact Jaccard on the candidates by
+   ``verified_near_dup_pairs``, the one candidate-pair verifier every
+   blocking scheme here (LSH, SimHash, sorted neighborhood) shares.
 4. ``simhash_pairs`` — 64-bit SimHash + banded Hamming blocking.
 
 All hashing uses Spark built-ins (xxhash64/md5) — JVM-side, no Python
@@ -370,115 +372,60 @@ def verified_near_dup_pairs(
     n: int = 3,
     threshold: float = 0.8,
 ) -> DataFrame:
-    """Exact n-gram-Jaccard verification of LSH candidate pairs — the
-    production two-phase near-dedup pattern: a cheap probabilistic
-    candidate generator (``minhash_lsh_pairs`` / ``simhash_pairs``)
-    followed by exact similarity computed ONLY on the candidate set.
+    """Exact n-gram-Jaccard verification of candidate pairs — the
+    production two-phase near-dedup pattern: a cheap candidate
+    generator (``minhash_lsh_pairs`` / ``simhash_pairs`` /
+    sorted-neighborhood windows) followed by exact similarity computed
+    ONLY on the candidate set.
 
-    Returns (doc_a, doc_b, jaccard) for candidates whose exact word
-    n-gram Jaccard >= ``threshold``. When the candidate generator has
-    no false negatives at ``threshold`` (the regime banding parameters
-    are chosen for), the output equals the exact all-pairs answer —
-    which is what makes the probabilistic machinery oracle-checkable.
+    Returns (doc_a, doc_b, jaccard) with doc_a < doc_b for candidates
+    whose exact word n-gram Jaccard >= ``threshold``. Candidates may
+    come in either orientation and repeated: each unordered pair is
+    verified and emitted once, and a self-pair (a, a) never is. When
+    the candidate generator has no false negatives at ``threshold``
+    (the regime banding parameters are chosen for), the output equals
+    the exact all-pairs answer — which is what makes the probabilistic
+    machinery oracle-checkable.
 
-    Scale shape: the corpus is first semi-joined down to the docs that
-    appear in any candidate pair, so the exact pass shingles
-    |candidate docs| documents, not the corpus; the intersection join
-    then runs on that reduced inverted index and is inner-joined back
-    to the candidate pair list.
+    Scale shape: keyed BY THE PAIR. Only docs that appear in some
+    candidate are shingled, each into one array of shingle hashes; the
+    candidate list joins both docs' arrays and intersects them per row
+    (array_intersect is a codegen'd hash-set intersection). Work is
+    |pairs| x shingles-per-doc — linear in the candidate count and
+    independent of shingle hot-key skew, with no inverted-index
+    self-join and no post-join aggregation.
+
+    Shingles travel as xxhash64 longs (8 B vs ~25 B strings — each
+    doc's set is re-shipped once per pair it appears in). Same
+    negligible-collision contract as chunk_dedup's 64-bit chunks: a
+    collision can only inflate an intersection, with probability
+    ~2^-64 per shingle pair.
     """
-    cand = candidates.select("doc_a", "doc_b")
-    ids = (
-        cand.select(F.col("doc_a").alias(id_col))
-        .union(cand.select(F.col("doc_b").alias(id_col)))
-        .distinct()
-    )
-    sh = track_persist(
-        word_shingles(docs.join(ids, on=id_col, how="left_semi"),
-                      id_col, text_col, n)
-    )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, on="shingle")
+    # canonical orientation BEFORE the distinct, so (b, a) and (a, b)
+    # collapse to one pair and no caller's orientation is dropped.
+    # Persisted: the pair set is referenced three times below (both
+    # legs of the ids union + the final pair join), and without a
+    # persist the caller's candidate-generation plan — often a
+    # multi-join pipeline — replays once per reference. Pairs are two
+    # ids per row, so this is the cheapest possible cut point.
+    cand = track_persist(
+        candidates.select(
+            F.least("doc_a", "doc_b").alias("doc_a"),
+            F.greatest("doc_a", "doc_b").alias("doc_b"),
+        )
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-        .join(cand, on=["doc_a", "doc_b"], how="left_semi")
+        .distinct()
     )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("nb"))
-    return (
-        inter.join(sa, "doc_a").join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def verify_pairs_keyed(
-    docs: DataFrame,
-    candidates: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-    shingle_hashes: DataFrame | None = None,
-) -> DataFrame:
-    """Exact n-gram-Jaccard verification keyed BY THE PAIR — the dense-
-    candidate sibling of ``verified_near_dup_pairs``. That verifier
-    rebuilds the inverted shingle index and intersects ALL doc pairs
-    before semi-joining to the candidates; fine when candidates cover
-    few docs (LSH output), wasteful when nearly every doc appears in
-    some pair (sorted-neighborhood windows, blocking schemes with
-    dense blocks — there it recomputes the full quadratic
-    intersection it was supposed to avoid).
-
-    Here intersection work is |pairs| x shingles-per-doc, linear in
-    the candidate count and INDEPENDENT of shingle hot-key skew: fan
-    each pair out over the left doc's shingles (join on doc_a), then
-    probe the right doc's shingle set with one (doc_b, shingle) join.
-
-    Returns (doc_a, doc_b, jaccard) for candidates with exact Jaccard
-    >= ``threshold``.
-
-    ``shingle_hashes`` (optional): a precomputed (id_col, __sh__)
-    table of per-doc DISTINCT xxhash64 shingle hashes — callers that
-    already shingled the corpus for candidate generation (prefix
-    filtering) pass their persisted table here so verification reuses
-    it instead of re-shingling every candidate doc from raw text.
-    """
-    # the distinct pair set is referenced THREE times below (both legs
-    # of the ids union + the final pair join); without a persist the
-    # caller's candidate-generation plan — often a multi-join pipeline —
-    # replays once per reference. Pairs are two ids per row, so this is
-    # the cheapest possible cut point.
-    cand = track_persist(candidates.select("doc_a", "doc_b").distinct())
     ids = (
         cand.select(F.col("doc_a").alias(id_col))
         .union(cand.select(F.col("doc_b").alias(id_col)))
         .distinct()
     )
-    # one shingle-set array per candidate doc; the pair join then does
-    # a per-row hash-set intersection (array_intersect is linear) —
-    # no exploded intersection shuffle, no post-join aggregation.
-    # Shingles travel as xxhash64 longs (8 B vs ~25 B strings — each
-    # doc's set is re-shipped once per pair it appears in); same
-    # negligible-collision contract as chunk_dedup's 64-bit chunks.
-    if shingle_hashes is not None:
-        hashed = shingle_hashes.join(ids, on=id_col, how="left_semi").select(
-            id_col, F.col("__sh__").alias("__h__")
-        )
-    else:
-        hashed = word_shingles(
-            docs.join(ids, on=id_col, how="left_semi"), id_col, text_col, n
-        ).select(id_col, F.xxhash64("shingle").alias("__h__"))
+    hashed = _hashed_shingles(
+        docs.join(ids, on=id_col, how="left_semi"), id_col, text_col, n
+    )
     doc_sets = track_persist(
-        hashed.groupBy(id_col).agg(F.collect_list("__h__").alias("__shs__"))
+        hashed.groupBy(id_col).agg(F.collect_list("shingle").alias("__shs__"))
     )
     sa = doc_sets.select(F.col(id_col).alias("doc_a"), F.col("__shs__").alias("__sa__"))
     sb = doc_sets.select(F.col(id_col).alias("doc_b"), F.col("__shs__").alias("__sb__"))
@@ -549,17 +496,20 @@ def prefix_filter_pairs(
     intersection alpha = ceil(t·(|A|+|B|)/(1+t)) implied by
     J >= t. The prune is lossless (alpha is epsilon-relaxed so float
     rounding can only ADMIT a candidate, and verification recomputes
-    exact string-shingle Jaccard); on dense-candidate corpora it cuts
-    the pairs entering verification severalfold.
+    the exact intersection of the shingle-hash sets); on
+    dense-candidate corpora it cuts the pairs entering verification
+    severalfold.
+
+    Shingles are compared as 64-bit xxhash64 values throughout, the
+    same contract as chunk_dedup: a hash collision can inflate an
+    intersection (and so admit a pair), with probability ~2^-64 per
+    shingle pair.
     """
     # the candidate index runs entirely on 64-bit shingle hashes (8 B
     # vs ~25 B strings through two shingle-key shuffles and the doc
     # window; any consistent total order works for prefix filtering,
     # so (df, hash) replaces (df, shingle) as the canonical order) —
-    # same negligible-collision contract as chunk_dedup; the final
-    # verification recomputes EXACT string-shingle Jaccard on the
-    # candidates, so a collision can only add a candidate, never a
-    # false positive
+    # same negligible-collision contract as chunk_dedup (see docstring)
     # plain persist (r15, measured): a hash(__sh__) keyed persist was
     # A/B'd and LOST — ReusedExchange already collapses the identical
     # __sh__-keyed consumer exchanges, while the keyed persist
@@ -732,8 +682,8 @@ def sorted_neighborhood_pairs(
        previous band, so every pair with rank distance < ``window``
        meets in exactly one band — shuffle keys are bands, never a
        global order.
-    3. Verification shingles only the candidate docs
-       (``verified_near_dup_pairs``).
+    3. Verification shingles only the candidate docs and intersects
+       them per pair (``verified_near_dup_pairs``).
     Bucket skew follows the key-prefix distribution; raise
     ``prefix_len`` to split hot prefixes.
     """
@@ -773,16 +723,10 @@ def sorted_neighborhood_pairs(
             (F.col("__rb__") > F.col("__ra__"))
             & (F.col("__rb__") - F.col("__ra__") < window)
         )
-        .select(
-            F.least("__ida__", "__idb__").alias("doc_a"),
-            F.greatest("__ida__", "__idb__").alias("doc_b"),
-        )
+        .select(F.col("__ida__").alias("doc_a"), F.col("__idb__").alias("doc_b"))
     )
-    # SNM candidates cover essentially every doc, so verification is
-    # pair-keyed (work ~ |pairs| x doc size) rather than rebuilding
-    # the full inverted-index intersection (verified_near_dup_pairs,
-    # whose cost is shingle-frequency-quadratic): 6.6 -> ~3 s at sf0.1.
-    return verify_pairs_keyed(docs, cand, id_col, text_col, n, threshold)
+    # the verifier puts each pair in (lo, hi) order itself
+    return verified_near_dup_pairs(docs, cand, id_col, text_col, n, threshold)
 
 
 def simhash_docs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

@@ -532,7 +532,13 @@ def lsh_buckets(
     # fold it replaced (512 getItem bound/null checks beat one array
     # allocation, apparently not) — so the runtime plan is the exact
     # r9 shape; only the CONSTRUCTION route changed.
+    # the temp column's name must not collide with an input or the
+    # output column, which the final drop would otherwise silently
+    # remove (column resolution is case-insensitive by default)
+    taken = {c.lower() for c in (*df.columns, bucket_col)}
     vv = "__lshv__"
+    while vv in taken:
+        vv += "_"
     terms = []
     for i, plane in enumerate(_random_planes(dim, bits, seed)):
         lits = ", ".join(f"{x!r}D" for x in plane)

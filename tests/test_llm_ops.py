@@ -63,6 +63,21 @@ def test_lsh_dup_sims_match_exact_values(spark, planted_embeddings):
     assert lsh == exact  # exact cosine verified on candidates, same rounding
 
 
+def test_lsh_buckets_keeps_input_column_named_like_its_temp(spark, planted_embeddings):
+    """lsh_buckets projects a temp column and drops it; an input column
+    of the same name must survive untouched, with the same buckets."""
+    from clinical_data_lake_spark.llm.similarity import lsh_buckets
+
+    plain = {
+        r.vec_id: r.bucket
+        for r in lsh_buckets(planted_embeddings, dim=64).collect()
+    }
+    tagged = planted_embeddings.withColumn("__lshv__", F.col("vec_id") * 10)
+    out = lsh_buckets(tagged, dim=64).collect()
+    assert {r.vec_id: r.bucket for r in out} == plain
+    assert all(r["__lshv__"] == r.vec_id * 10 for r in out)
+
+
 def test_ivf_topk_exact_when_probing_all_cells(spark, planted_embeddings):
     """n_probe == n_cells degenerates to brute force — results must
     equal the exact cosine top-k."""
@@ -165,7 +180,10 @@ def test_verified_near_dup_pairs_equals_exact_answer(spark):
     """The two-phase pattern (LSH candidates -> exact-Jaccard verify)
     must equal the exact all-pairs answer when the candidate generator
     covers every true pair, and must drop candidate pairs below the
-    verification threshold (no false positives by construction)."""
+    verification threshold (no false positives by construction).
+    Candidate orientation and repeats do not matter: reversed and
+    duplicated pairs give the forward answer, and a self-pair is never
+    emitted."""
     from clinical_data_lake_spark.llm.dedup import (
         simhash_pairs, verified_near_dup_pairs,
     )
@@ -199,6 +217,16 @@ def test_verified_near_dup_pairs_equals_exact_answer(spark):
     assert sh == exact
     # sub-threshold candidate pairs are verified away: nothing below 0.8
     assert all(j >= 0.8 for j in mh.values())
+    # every pair of the four docs, forward / reversed and repeated /
+    # both / with self-pairs: one (lo, hi) row per verified pair
+    fwd = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    rev = [(b, a) for a, b in fwd]
+    variants = [fwd, rev + rev, fwd + rev, fwd + [(d, d) for d in range(1, 5)]]
+    for pairs in variants:
+        cand = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+        rows = verified_near_dup_pairs(docs, cand, threshold=0.8).collect()
+        assert len(rows) == len(exact)
+        assert {(r.doc_a, r.doc_b): r.jaccard for r in rows} == exact
 
 
 def test_minhash_signature_values_in_31bit_range(spark):

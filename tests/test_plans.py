@@ -1,8 +1,10 @@
 """Physical-plan shape assertions — the 100 TB design claims, regression
 tested: filters reach the parquet scan, scans prune columns, partial
 aggregation is map-side, small dims broadcast, top-k never global-sorts,
-distributed rank never funnels fact rows through one partition, and no
-row-at-a-time Python UDF appears in any registered query's plan.
+and distributed rank never funnels fact rows through one partition. (No
+row-at-a-time Python UDF in any registered query's plan is the
+``python-row-udf`` rule of the registry-wide audit sweep,
+tests/test_plan_audit_sweep.py.)
 """
 
 from __future__ import annotations
@@ -71,15 +73,6 @@ def test_window_features_share_one_exchange(spark):
     """All rolling features ride one partitionBy(user) shuffle."""
     p = _plan(spark, "window_range_sum")
     assert p.count("Exchange hashpartitioning(user_id") == 1
-
-
-def test_no_row_at_a_time_python_udf_anywhere(spark):
-    """BatchEvalPython = pickled row-at-a-time UDF — banned. Arrow paths
-    (ArrowEvalPython / mapInPandas) are the only Python allowed."""
-    for name in dq.QUERIES:
-        df = dq.QUERIES[name](spark, SF_ORACLE)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan, f"{name} uses a row-wise Python UDF"
 
 
 def test_scalar_attach_is_broadcast_nested_loop(spark):
