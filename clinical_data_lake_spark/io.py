@@ -62,20 +62,32 @@ _EVENTS_SCHEMA = (
 )
 
 
-_TS_UNIT_CACHE: dict[tuple[str, str], str] = {}
+def _memo_key(path: str) -> tuple[str, int | None]:
+    """Key for the footer memos below: the absolute path plus its
+    ``st_mtime_ns``. A table rewritten in place (Spark's overwrite
+    replaces the directory) gets a new mtime, so its new footer is
+    read instead of the old one. A missing path keys on None and
+    fails in the reader, as it would unmemoized."""
+    path = os.path.abspath(path)
+    try:
+        return path, os.stat(path).st_mtime_ns
+    except FileNotFoundError:
+        return path, None
+
+
+_TS_UNIT_CACHE: dict[tuple[tuple[str, int | None], str], str] = {}
 
 
 def _parquet_ts_unit(path: str, column: str = "ts") -> str:
     """Time unit ('s'|'ms'|'us'|'ns') of a parquet timestamp column,
     from the file footer. Footer-only read: cheap, driver-side, no
-    Spark action — and memoized per (path, column), since query
-    construction calls read_table dozens of times per run and the
-    unit of a given file never changes within one. Raises if the
-    column isn't a timestamp — a loud failure beats silently
+    Spark action — and memoized per (path, mtime, column), since query
+    construction calls read_table dozens of times per run. Raises if
+    the column isn't a timestamp — a loud failure beats silently
     mis-scaling every event time."""
     import pyarrow.parquet as pq
 
-    key = (path, column)
+    key = (_memo_key(path), column)
     cached = _TS_UNIT_CACHE.get(key)
     if cached is not None:
         return cached
@@ -106,9 +118,9 @@ _TS_FROM_INT64 = {
 # spark.read.parquet call (measured r16; an explicit-schema read is
 # ~19 ms), and a session issues hundreds of read_table calls. The scan
 # itself still lists files and reads data on every execution — nothing
-# computed is cached. Keyed on the absolute path; testdata paths are
-# immutable within a session (the driver contract).
-_SCHEMA_CACHE: dict[str, StructType] = {}
+# computed is cached. Keyed on ``_memo_key`` (path + mtime), so a
+# table rewritten at the same path is read with its new schema.
+_SCHEMA_CACHE: dict[tuple[str, int | None], StructType] = {}
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -117,7 +129,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = spark.read.schema(_EVENTS_SCHEMA).parquet(path)
         return df.withColumn("ts", F.expr(_TS_FROM_INT64[_parquet_ts_unit(path)]))
-    key = os.path.abspath(path)
+    key = _memo_key(path)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         schema = spark.read.parquet(path).schema

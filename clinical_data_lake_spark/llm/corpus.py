@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 from ..operators.caching import iter_checkpoint
+from ..operators.windows import bucketed_prefix_sums, range_buckets
 from .dedup import _ensure_parallelism, _normalized
 
 
@@ -292,17 +293,9 @@ def budget_select(
 
     The semantics are a global ordered cumulative sum, but the naive
     ``Window.orderBy(...)`` with no partition funnels the corpus
-    through ONE task. This is the distributed prefix-sum restatement
-    (same two-phase shape as ``cohort.distributed_rank``):
-
-      1. range-bucket rows by quality (order-preserving pure column
-         expression over broadcast [min, max] bounds — no sampling, so
-         re-evaluation always agrees);
-      2. per-bucket token totals -> cumulative offsets via a window
-         over the <= ``num_buckets``-row bucket table (the only global
-         window, bounded by construction);
-      3. in-bucket running sum (one shuffle on the bucket key) plus
-         the broadcast offset = the exact global cumulative sum.
+    through ONE task. Here it is ``windows.bucketed_prefix_sums`` of the
+    token counts over range tiles of the negated quality (descending
+    order), with no corpus-scale single-partition window.
 
     Returns (id, tokens, quality, cum_tokens) for the selected docs;
     ``cum_tokens`` is inclusive, so the first doc that would overflow
@@ -311,45 +304,20 @@ def budget_select(
     """
     from ..operators.caching import track_persist
 
-    bounds = scored.agg(
-        F.min(quality_col).alias("__lo__"), F.max(quality_col).alias("__hi__")
-    )
-    width = F.greatest(
-        (F.col("__hi__") - F.col("__lo__")) / F.lit(float(num_buckets)),
-        F.lit(1e-12),
-    )
     # persisted: consumed by the bucket-total aggregation AND the final
     # windowed pass — unpersisted, each branch re-scans the corpus (and
     # clones the bounds aggregate), 4 scans where 2 suffice. The table
     # is the caller's narrow (id, tokens, quality) projection + a long.
     bucketed = track_persist(
-        scored.crossJoin(F.broadcast(bounds))
-        .withColumn(
-            "__bkt__",
-            F.least(
-                F.floor((F.col("__hi__") - F.col(quality_col)) / width),
-                F.lit(num_buckets - 1),
-            ),
-        )
-        .drop("__lo__", "__hi__")
-    )
-    btotals = bucketed.groupBy("__bkt__").agg(F.sum(token_col).alias("__bt__"))
-    w_off = Window.orderBy("__bkt__").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = btotals.select(
-        "__bkt__",
-        F.coalesce(F.sum("__bt__").over(w_off), F.lit(0)).cast("long").alias("__off__"),
-    )
-    w_local = (
-        Window.partitionBy("__bkt__")
-        .orderBy(F.col(quality_col).desc(), F.col(id_col))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        range_buckets(scored, -F.col(quality_col).cast("double"), num_buckets)
     )
     return (
-        bucketed.join(F.broadcast(offsets), on="__bkt__")
-        .withColumn(
-            "cum_tokens",
-            (F.col("__off__") + F.sum(token_col).over(w_local)).cast("long"),
+        bucketed_prefix_sums(
+            bucketed,
+            [F.col(quality_col).desc(), F.col(id_col)],
+            {"cum_tokens": F.col(token_col)},
         )
+        .withColumn("cum_tokens", F.col("cum_tokens").cast("long"))
         .filter(F.col("cum_tokens") <= token_budget)
         .select(id_col, token_col, quality_col, "cum_tokens")
     )
@@ -461,14 +429,14 @@ def contamination_fraction(
     document. Hashes, not strings, through the join — the same 64-bit
     contract as the dedup stack.
     """
-    from .dedup import word_shingles
+    from .dedup import _hashed_shingles
 
-    ev = word_shingles(eval_docs, id_col, text_col, n).select(
-        id_col, F.xxhash64("shingle").alias("__h__")
+    ev = _hashed_shingles(eval_docs, id_col, text_col, n).withColumnRenamed(
+        "shingle", "__h__"
     )
     corp = (
-        word_shingles(corpus, id_col, text_col, n)
-        .select(F.xxhash64("shingle").alias("__h__"))
+        _hashed_shingles(corpus, id_col, text_col, n)
+        .select(F.col("shingle").alias("__h__"))
         .distinct()
         .withColumn("__hit__", F.lit(1))
     )
@@ -752,57 +720,22 @@ def shard_plan(
     stays in the shard it started in), which is the standard
     concat-and-cut convention.
 
-    Scale shape: the global ordered cumulative sum is the distributed
-    prefix-sum restatement (budget_select's shape): ``num_buckets``
-    equal-width id-range buckets (order-preserving, pure arithmetic
-    over broadcast [min, max] bounds), per-bucket token totals ->
-    cumulative offsets via a window over the bounded bucket table,
-    in-bucket running sum on the bucket-key shuffle + broadcast
-    offset. No corpus-wide single-partition sort.
+    Scale shape: the global ordered cumulative sum is
+    ``windows.bucketed_prefix_sums`` of the token counts over id range
+    tiles. No corpus-wide single-partition sort.
 
     Returns (shard_id, n_docs, n_tokens), one row per shard.
     """
+    from ..operators.caching import track_persist
+
     if shard_tokens <= 0:
         raise ValueError("shard_tokens must be positive")
     toks = docs.select(
         F.col(id_col), T.token_count(F.col(text_col)).cast("long").alias("__nt__")
     )
-    bounds = toks.agg(
-        F.min(id_col).alias("__lo__"), F.max(id_col).alias("__hi__")
-    )
-    bucket = F.least(
-        F.floor(
-            ((F.col(id_col) - F.col("__lo__")) * F.lit(int(num_buckets)))
-            .cast("double")
-            / (F.col("__hi__") - F.col("__lo__") + F.lit(1)).cast("double")
-        ),
-        F.lit(num_buckets - 1).cast("long"),
-    ).cast("long")
-    from ..operators.caching import track_persist
-
-    bucketed = track_persist(
-        toks.crossJoin(F.broadcast(bounds)).select(
-            id_col, "__nt__", bucket.alias("__bkt__")
-        )
-    )
-    btotals = bucketed.groupBy("__bkt__").agg(F.sum("__nt__").alias("__bt__"))
-    w_off = Window.orderBy("__bkt__").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = btotals.select(
-        "__bkt__",
-        F.coalesce(F.sum("__bt__").over(w_off), F.lit(0)).cast("long").alias("__off__"),
-    )
-    w_in = (
-        Window.partitionBy("__bkt__")
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    bucketed = track_persist(range_buckets(toks, F.col(id_col), num_buckets))
     assigned = (
-        bucketed.join(F.broadcast(offsets), on="__bkt__")
-        .select(
-            id_col,
-            "__nt__",
-            (F.sum("__nt__").over(w_in) + F.col("__off__")).alias("__cum__"),
-        )
+        bucketed_prefix_sums(bucketed, [id_col], {"__cum__": F.col("__nt__")})
         .select(
             id_col,
             "__nt__",

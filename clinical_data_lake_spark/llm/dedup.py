@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.caching import iter_checkpoint, track_persist
+from ..operators.er import sorted_neighborhood_block
 
 # Mersenne prime 2^31-1 as the universal-hash modulus. The base hash
 # and both coefficients stay below 2^31, so a*h+b < 2^62 — inside the
@@ -169,6 +170,18 @@ def word_shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     )
 
 
+def _hashed_shingles(
+    docs: DataFrame, id_col: str, text_col: str, n: int
+) -> DataFrame:
+    """Distinct per-doc word shingles as xxhash64 longs — the narrow
+    (8 B/key) representation the exact comparators, the verifier and
+    the incremental-admission family shuffle instead of shingle
+    strings."""
+    return word_shingles(docs, id_col, text_col, n).select(
+        F.col(id_col), F.xxhash64("shingle").alias("shingle")
+    )
+
+
 def _shingle_intersections(
     docs: DataFrame,
     id_col: str,
@@ -190,9 +203,7 @@ def _shingle_intersections(
     keys instead of ~25-byte strings. Same negligible-collision
     contract as chunk_dedup / prefix_filter_pairs (a collision could
     only merge two shingles of a doc pair; ~2^-64 per string pair)."""
-    sh = word_shingles(docs, id_col, text_col, n).select(
-        F.col(id_col), F.xxhash64("shingle").alias("shingle")
-    )
+    sh = _hashed_shingles(docs, id_col, text_col, n)
     if max_doc_freq is not None:
         # the raw shingle table feeds BOTH the frequency count and the
         # semi-join base; unpersisted, each branch re-runs the explode
@@ -516,8 +527,8 @@ def prefix_filter_pairs(
     # shuffles raw exploded rows the df groupBy would have partially
     # aggregated first
     sh = track_persist(
-        word_shingles(docs, id_col, text_col, n).select(
-            id_col, F.xxhash64("shingle").alias("__sh__")
+        _hashed_shingles(docs, id_col, text_col, n).withColumnRenamed(
+            "shingle", "__sh__"
         )
     )
     dfreq = sh.groupBy("__sh__").agg(F.count(F.lit(1)).alias("__df__"))
@@ -672,60 +683,21 @@ def sorted_neighborhood_pairs(
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b and
     jaccard >= ``threshold``.
 
-    Scale shape — no global sort, no single-partition window:
-    1. Global rank by (key, id) via order-preserving PREFIX buckets
-       (the first ``prefix_len`` key chars): row_number within each
-       bucket + the broadcast cumulative count of earlier buckets.
-       The only global window runs over the per-bucket count table.
-    2. Neighbor pairing as a band join: rank-bands of width
-       ``window``, the right side duplicated into its own and the
-       previous band, so every pair with rank distance < ``window``
-       meets in exactly one band — shuffle keys are bands, never a
-       global order.
-    3. Verification shingles only the candidate docs and intersects
-       them per pair (``verified_near_dup_pairs``).
-    Bucket skew follows the key-prefix distribution; raise
-    ``prefix_len`` to split hot prefixes.
+    Blocking is ``operators.er.sorted_neighborhood_block`` on that key
+    (bare id pairs: a global rank from ``windows.bucketed_prefix_sums``
+    over key-prefix buckets, then a rank-band equi-join — no global
+    sort, no single-partition window; raise ``prefix_len`` to split
+    hot prefixes). Verification shingles only the candidate docs and
+    intersects them per pair (``verified_near_dup_pairs``, which also
+    puts each pair in (lo, hi) order).
     """
     key = F.substring(_normalized(text_col), 1, key_len)
-    base = docs.select(F.col(id_col), key.alias("__key__"))
-    b = base.withColumn("__bkt__", F.substring("__key__", 1, prefix_len))
-    counts = b.groupBy("__bkt__").agg(F.count(F.lit(1)).alias("__bn__"))
-    w_off = Window.orderBy("__bkt__").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "__bkt__", F.coalesce(F.sum("__bn__").over(w_off), F.lit(0)).alias("__off__")
+    ids = sorted_neighborhood_block(
+        docs, id_col, key, window, prefix_len, with_attributes=False
     )
-    w_local = Window.partitionBy("__bkt__").orderBy("__key__", id_col)
-    # (id, rank) is 16 B/doc but its lineage holds the full-text
-    # regexp normalization; unpersisted, BOTH band-join sides re-run
-    # that scan (measured 3.8 s of the 6.6 s total at sf0.1)
-    ranked = track_persist(
-        b.join(F.broadcast(offsets), on="__bkt__")
-        .select(
-            F.col(id_col),
-            (F.row_number().over(w_local) + F.col("__off__")).alias("__rk__"),
-        )
+    cand = ids.select(
+        F.col(f"{id_col}_a").alias("doc_a"), F.col(f"{id_col}_b").alias("doc_b")
     )
-    band = F.floor(F.col("__rk__") / F.lit(window))
-    a_side = ranked.select(
-        F.col(id_col).alias("__ida__"),
-        F.col("__rk__").alias("__ra__"),
-        band.alias("__band__"),
-    )
-    b_side = ranked.select(
-        F.col(id_col).alias("__idb__"),
-        F.col("__rk__").alias("__rb__"),
-        F.explode(F.array(band, band - 1)).alias("__band__"),
-    )
-    cand = (
-        a_side.join(b_side, on="__band__")
-        .filter(
-            (F.col("__rb__") > F.col("__ra__"))
-            & (F.col("__rb__") - F.col("__ra__") < window)
-        )
-        .select(F.col("__ida__").alias("doc_a"), F.col("__idb__").alias("doc_b"))
-    )
-    # the verifier puts each pair in (lo, hi) order itself
     return verified_near_dup_pairs(docs, cand, id_col, text_col, n, threshold)
 
 
@@ -2069,17 +2041,6 @@ def minhash_lsh_sweep(
                 digits,
             ).alias("recall"),
         )
-    )
-
-
-def _hashed_shingles(
-    docs: DataFrame, id_col: str, text_col: str, n: int
-) -> DataFrame:
-    """Distinct per-doc word shingles as xxhash64 longs — the narrow
-    (8 B/key) representation the incremental-admission family shuffles
-    instead of shingle strings."""
-    return word_shingles(docs, id_col, text_col, n).select(
-        F.col(id_col), F.xxhash64("shingle").alias("shingle")
     )
 
 

@@ -29,7 +29,7 @@ from ..functions.scalar import day_index
 from ..operators.filters import like_flags
 from ..operators.joins import with_global_scalar
 from ..operators.sorts import global_min
-from ..operators.windows import rolling_flag_sums
+from ..operators.windows import bucketed_prefix_sums, range_buckets, rolling_flag_sums
 
 
 def _join_group_stats(df: DataFrame, stats: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -323,57 +323,30 @@ def quantile_normalize(
 
     A naive ``percent_rank().over(Window.orderBy(col))`` is a
     single-partition sort of the whole table. Here ranks come from the
-    distinct-value table (one groupBy), whose cumulative counts use
-    the same bucketed prefix-sum as ``auc_exact``; rows then pick up
-    their value's rank with one value-keyed join. No row-scale data
-    crosses a SinglePartition exchange.
+    distinct-value table (one groupBy): ``windows.bucketed_prefix_sums``
+    of the value counts over range tiles gives each value its count of
+    smaller values and the row total; rows then pick up their value's
+    rank with one value-keyed join. No row-scale data crosses a
+    SinglePartition exchange.
     """
-    from pyspark.sql import Window
-
     vals = df.groupBy(F.col(value_col).cast("double").alias("__v__")).agg(
         F.count(F.lit(1)).alias("__cnt__")
     )
-    bounds = vals.agg(F.min("__v__").alias("__lo__"), F.max("__v__").alias("__hi__"))
-    width = F.greatest(
-        (F.col("__hi__") - F.col("__lo__")) / F.lit(float(num_buckets)),
-        F.lit(1e-12),
-    )
-    bucketed = (
-        vals.crossJoin(F.broadcast(bounds))
-        .withColumn(
-            "__bkt__",
-            F.least(
-                F.floor((F.col("__v__") - F.col("__lo__")) / width),
-                F.lit(num_buckets - 1),
-            ),
-        )
-        .drop("__lo__", "__hi__")
-    )
-    btotals = bucketed.groupBy("__bkt__").agg(F.sum("__cnt__").alias("__bt__"))
-    w_off = Window.orderBy("__bkt__").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = btotals.select(
-        "__bkt__",
-        F.coalesce(F.sum("__bt__").over(w_off), F.lit(0)).cast("long").alias("__off__"),
-    )
-    w_local = (
-        Window.partitionBy("__bkt__")
-        .orderBy("__v__")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    n_row = vals.agg(F.sum("__cnt__").alias("__n__"))
     ranked = (
-        bucketed.join(F.broadcast(offsets), on="__bkt__")
-        .withColumn(
-            "__below__",
-            F.col("__off__") + F.coalesce(F.sum("__cnt__").over(w_local), F.lit(0)),
+        bucketed_prefix_sums(
+            range_buckets(vals, F.col("__v__"), num_buckets),
+            ["__v__"],
+            {"__le__": F.col("__cnt__")},
+            totals={"__le__": "__n__"},
         )
-        .crossJoin(F.broadcast(n_row))
         .select(
             "__v__",
             F.when(
                 F.col("__n__") > 1,
                 F.round(
-                    F.col("__below__").cast("double") / (F.col("__n__") - 1), digits
+                    (F.col("__le__") - F.col("__cnt__")).cast("double")
+                    / (F.col("__n__") - 1),
+                    digits,
                 ),
             ).otherwise(F.lit(0.0)).alias(alias),
         )

@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.windows import bucketed_prefix_sums, range_buckets
+
 
 def cooccurrence_flags(
     entities: DataFrame,
@@ -413,12 +415,10 @@ def ks_test(
     Distributed shape — NO single-partition window over data-scale
     rows: values are rounded to ``digits`` and group-counted per arm
     (the only data-scale shuffle), then the global cumulative counts
-    use the same two-phase prefix sum as ``budget_select``: range-
-    bucket the distinct values (order-preserving pure expression over
-    broadcast [min, max] bounds), per-bucket offsets via a window over
-    the <= ``num_buckets``-row bucket table, in-bucket running sums
-    keyed by bucket. CDF gaps are single divisions of exact integer
-    cumulative counts, so the max is merge-order-independent.
+    and arm totals come from ``windows.bucketed_prefix_sums`` over
+    range tiles of the distinct values. CDF gaps are single divisions
+    of exact integer cumulative counts, so the max is
+    merge-order-independent.
     """
     from ..operators.caching import track_persist
 
@@ -436,41 +436,11 @@ def ks_test(
         F.sum("__is1__").alias("c1"),
         F.sum(F.lit(1) - F.col("__is1__")).alias("c2"),
     )
-    bounds = pts.agg(F.min("__v__").alias("__lo__"), F.max("__v__").alias("__hi__"))
-    width = F.greatest(
-        (F.col("__hi__") - F.col("__lo__")) / F.lit(float(num_buckets)),
-        F.lit(1e-12),
-    )
-    bucketed = track_persist(
-        pts.crossJoin(F.broadcast(bounds)).select(
-            "__v__", "c1", "c2",
-            F.least(
-                F.floor((F.col("__v__") - F.col("__lo__")) / width),
-                F.lit(num_buckets - 1),
-            ).alias("__bkt__"),
-        )
-    )
-    w_off = Window.orderBy("__bkt__").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        bucketed.groupBy("__bkt__")
-        .agg(F.sum("c1").alias("b1"), F.sum("c2").alias("b2"))
-        .select(
-            "__bkt__",
-            F.coalesce(F.sum("b1").over(w_off), F.lit(0)).alias("off1"),
-            F.coalesce(F.sum("b2").over(w_off), F.lit(0)).alias("off2"),
-        )
-    )
-    w_in = (
-        Window.partitionBy("__bkt__")
-        .orderBy("__v__")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = bucketed.join(F.broadcast(offsets), on="__bkt__").select(
-        (F.col("off1") + F.sum("c1").over(w_in)).alias("cum1"),
-        (F.col("off2") + F.sum("c2").over(w_in)).alias("cum2"),
-    )
-    totals = bucketed.agg(
-        F.sum("c1").alias("n1"), F.sum("c2").alias("n2")
+    cum = bucketed_prefix_sums(
+        track_persist(range_buckets(pts, F.col("__v__"), num_buckets)),
+        ["__v__"],
+        {"cum1": F.col("c1"), "cum2": F.col("c2")},
+        totals={"cum1": "n1", "cum2": "n2"},
     )
     gap = F.round(
         F.abs(
@@ -479,13 +449,10 @@ def ks_test(
         ),
         digits,
     )
-    return (
-        cum.crossJoin(F.broadcast(totals))
-        .agg(
-            F.max("n1").alias("n1"),
-            F.max("n2").alias("n2"),
-            F.max(gap).alias("d_stat"),
-        )
+    return cum.agg(
+        F.max("n1").alias("n1"),
+        F.max("n2").alias("n2"),
+        F.max(gap).alias("d_stat"),
     )
 
 

@@ -24,6 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.windows import bucketed_prefix_sums, range_buckets
+
 
 def train_decision_tree(
     train_df: DataFrame,
@@ -179,7 +181,7 @@ def fit_linear_per_group(
         + ", n long, intercept double, coefs array<double>, r2 double"
     )
 
-    def fit(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fit(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         base = {c: [str(k)] for c, k in zip(gcols, key)}
@@ -231,59 +233,24 @@ def auc_exact(
     thresholds behave). Returns ONE row (n_pos, n_neg, auc).
 
     Scale shape: one groupBy collapses the data to the distinct-score
-    table (cnt, n_pos per score); global rank offsets over that table
-    use the same bucketed prefix-sum as ``llm.corpus.budget_select`` —
-    range-bucket by score over broadcast [min,max] bounds, per-bucket
-    totals, a window over the <= num_buckets-row bucket table, and an
-    in-bucket running sum — so no data-sized set ever crosses a
-    SinglePartition exchange even when scores are near-unique (the
-    degenerate case for a naive Window.orderBy(score) rank).
+    table (cnt, n_pos per score); the count of rows at or below each
+    score is ``windows.bucketed_prefix_sums`` of ``cnt`` over score
+    range tiles — so no data-sized set ever crosses a SinglePartition
+    exchange even when scores are near-unique (the degenerate case for
+    a naive Window.orderBy(score) rank).
     """
-    from pyspark.sql import Window
-
     y = F.col(label_col).cast("long")
     scores = df.groupBy(score_col).agg(
         F.count(F.lit(1)).alias("cnt"), F.sum(y).alias("pos")
     )
-    bounds = scores.agg(
-        F.min(score_col).alias("__lo__"), F.max(score_col).alias("__hi__")
-    )
-    width = F.greatest(
-        (F.col("__hi__") - F.col("__lo__")) / F.lit(float(num_buckets)),
-        F.lit(1e-12),
-    )
-    bucketed = (
-        scores.crossJoin(F.broadcast(bounds))
-        .withColumn(
-            "__bkt__",
-            F.least(
-                F.floor((F.col(score_col) - F.col("__lo__")) / width),
-                F.lit(num_buckets - 1),
-            ),
-        )
-        .drop("__lo__", "__hi__")
-    )
-    btotals = bucketed.groupBy("__bkt__").agg(F.sum("cnt").alias("__bt__"))
-    w_off = Window.orderBy("__bkt__").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = btotals.select(
-        "__bkt__",
-        F.coalesce(F.sum("__bt__").over(w_off), F.lit(0)).cast("long").alias("__off__"),
-    )
-    w_local = (
-        Window.partitionBy("__bkt__")
-        .orderBy(score_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = (
-        bucketed.join(F.broadcast(offsets), on="__bkt__")
-        .withColumn(
-            "below",
-            F.col("__off__") + F.coalesce(F.sum("cnt").over(w_local), F.lit(0)),
-        )
-        # midrank of every row tied at this score, exact in halves
-        .withColumn(
-            "midrank2", 2 * F.col("below") + F.col("cnt") + 1  # 2 * midrank
-        )
+    ranked = bucketed_prefix_sums(
+        range_buckets(scores, F.col(score_col), num_buckets),
+        [score_col],
+        {"__le__": F.col("cnt")},
+    ).withColumn(
+        # midrank of every row tied at this score, exact in halves:
+        # 2 * midrank = 2 * below + cnt + 1 with below = __le__ - cnt
+        "midrank2", 2 * F.col("__le__") - F.col("cnt") + 1
     )
     agg = ranked.agg(
         F.sum("pos").alias("n_pos"),

@@ -24,6 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .windows import bucketed_prefix_sums, range_buckets
+
 
 def group_count(df: DataFrame, keys: Sequence[str], alias: str = "cnt") -> DataFrame:
     """A1/A2 — SELECT keys, count(*) GROUP BY keys."""
@@ -446,42 +448,17 @@ def gini_concentration(
     values cannot change the sum, so any consistent total order gives
     the exact statistic.
 
-    Scale shape: global ranks come from the same bucketed prefix-sum
-    as ``ml.train.auc_exact`` (range-bucket on the value, per-bucket
-    counts, a window over the <= num_buckets-row bucket table, an
-    in-bucket row_number) — no entity-scale data ever crosses a
-    SinglePartition exchange. rank*x products sum as decimals, so the
-    one-row reduction is exact at any count.
+    Scale shape: global ranks are running sums of 1 from
+    ``windows.bucketed_prefix_sums`` over value range tiles — no
+    entity-scale data ever crosses a SinglePartition exchange. rank*x
+    products sum as decimals, so the one-row reduction is exact at any
+    count.
     """
-    from pyspark.sql import Window
-
     vals = df.select(F.col(id_col).alias("__id__"), F.col(value_col).cast("double").alias("__x__"))
-    bounds = vals.agg(F.min("__x__").alias("__lo__"), F.max("__x__").alias("__hi__"))
-    width = F.greatest(
-        (F.col("__hi__") - F.col("__lo__")) / F.lit(float(num_buckets)),
-        F.lit(1e-12),
-    )
-    bucketed = (
-        vals.crossJoin(F.broadcast(bounds))
-        .withColumn(
-            "__bkt__",
-            F.least(
-                F.floor((F.col("__x__") - F.col("__lo__")) / width),
-                F.lit(num_buckets - 1),
-            ),
-        )
-        .drop("__lo__", "__hi__")
-    )
-    counts = bucketed.groupBy("__bkt__").agg(F.count(F.lit(1)).alias("__bn__"))
-    w_off = Window.orderBy("__bkt__").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "__bkt__",
-        F.coalesce(F.sum("__bn__").over(w_off), F.lit(0)).cast("long").alias("__off__"),
-    )
-    w_local = Window.partitionBy("__bkt__").orderBy("__x__", "__id__")
-    ranked = (
-        bucketed.join(F.broadcast(offsets), on="__bkt__")
-        .withColumn("__rk__", F.row_number().over(w_local) + F.col("__off__"))
+    ranked = bucketed_prefix_sums(
+        range_buckets(vals, F.col("__x__"), num_buckets),
+        ["__x__", "__id__"],
+        {"__rk__": F.lit(1)},
     )
     agg = ranked.agg(
         F.count(F.lit(1)).alias("n"),
@@ -520,9 +497,8 @@ def pareto_analysis(
     Scale shape: the raw table collapses to key-cardinality size in
     one groupBy (decimal sums, map-side combined); the ordering
     window runs over THAT table only. For key cardinalities too big
-    for one task, rank with the bucketed two-phase pattern
-    (``distributed_rank``); for dashboard-grade cardinalities this is
-    the right plan.
+    for one task, rank with ``windows.bucketed_prefix_sums``; for
+    dashboard-grade cardinalities this is the right plan.
     """
     keys = list(key_cols)
     per_key = df.groupBy(*keys).agg(
@@ -980,48 +956,21 @@ def lorenz_curve(
     bowing to the bottom-right means concentration (area between =
     Gini/2).
 
-    Scale shape: the SAME bucketed prefix-sum global rank as
-    ``gini_concentration`` (range buckets + window over the bounded
-    bucket table + in-bucket row_number — no entity-scale
-    SinglePartition exchange); each entity maps to segment
-    ceil(rank*n_points/n), per-segment decimal sums roll up
-    cumulatively over the n_points-row segment table.
+    Scale shape: the same global rank as ``gini_concentration``
+    (``windows.bucketed_prefix_sums``, which also hands every row the
+    entity count n — no entity-scale SinglePartition exchange); each
+    entity maps to segment ceil(rank*n_points/n), per-segment decimal
+    sums roll up cumulatively over the n_points-row segment table.
     """
     vals = df.select(
         F.col(id_col).alias("__id__"),
         F.col(value_col).cast("double").alias("__x__"),
     )
-    bounds = vals.agg(F.min("__x__").alias("__lo__"), F.max("__x__").alias("__hi__"))
-    width = F.greatest(
-        (F.col("__hi__") - F.col("__lo__")) / F.lit(float(num_buckets)),
-        F.lit(1e-12),
-    )
-    bucketed = (
-        vals.crossJoin(F.broadcast(bounds))
-        .withColumn(
-            "__bkt__",
-            F.least(
-                F.floor((F.col("__x__") - F.col("__lo__")) / width),
-                F.lit(num_buckets - 1),
-            ),
-        )
-        .drop("__lo__", "__hi__")
-    )
-    counts = bucketed.groupBy("__bkt__").agg(F.count(F.lit(1)).alias("__bn__"))
-    w_off = Window.orderBy("__bkt__").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "__bkt__",
-        F.coalesce(F.sum("__bn__").over(w_off), F.lit(0)).cast("long").alias("__off__"),
-        F.sum("__bn__").over(
-            Window.orderBy("__bkt__").rangeBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).cast("long").alias("__n__"),
-    )
-    w_local = Window.partitionBy("__bkt__").orderBy("__x__", "__id__")
-    ranked = (
-        bucketed.join(F.broadcast(offsets), on="__bkt__")
-        .withColumn("__rk__", F.row_number().over(w_local) + F.col("__off__"))
+    ranked = bucketed_prefix_sums(
+        range_buckets(vals, F.col("__x__"), num_buckets),
+        ["__x__", "__id__"],
+        {"__rk__": F.lit(1)},
+        totals={"__rk__": "__n__"},
     )
     # ceil(rk*P/n) via floor((rk*P - 1)/n) + 1: rk*P stays far inside
     # the double-exact integer range, identical in both engines

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from .caching import track_persist
 from .filters import contains_ci
+from .windows import bucketed_prefix_sums, range_buckets
 
 
 def comorbidity_topk(
@@ -67,8 +68,9 @@ def case_control_cohort(
     entity ids among non-cases, as many as there are cases.
 
     Deterministic restatement of the reference's ``.limit(count)``:
-    rank non-cases by entity id and keep rank <= case count, attached
-    via a broadcast 1-row aggregate instead of a driver ``.count()``.
+    rank non-cases by entity id (``windows.bucketed_prefix_sums``, no
+    single-partition sort) and keep rank <= case count, attached via a
+    broadcast 1-row aggregate instead of a driver ``.count()``.
     """
     case_ids = (
         events.filter(contains_ci(label_col, index_label))
@@ -83,7 +85,11 @@ def case_control_cohort(
     # output is one id column, so MEMORY_AND_DISK persistence is cheap
     # insurance at any scale; Spark evicts LRU if memory is tight.
     non_cases = track_persist(non_cases.select(entity_col))
-    ranked = distributed_rank(non_cases, entity_col)
+    ranked = bucketed_prefix_sums(
+        range_buckets(non_cases, F.col(entity_col), 64),
+        [entity_col],
+        {"__rk__": F.lit(1)},
+    )
     controls = (
         ranked
         .crossJoin(F.broadcast(n_cases))
@@ -91,51 +97,6 @@ def case_control_cohort(
         .select(entity_col, F.lit(0).alias("label"))
     )
     return cases.unionByName(controls)
-
-
-def distributed_rank(
-    df: DataFrame, order_col: str, num_buckets: int = 64, rank_col: str = "__rk__"
-) -> DataFrame:
-    """Global dense 1..N row_number over a NUMERIC column without a
-    single-partition exchange.
-
-    ``Window.orderBy(col)`` with no partitionBy funnels every row through
-    one task — correct at sf0.01, an OOM/straggler at 100x. Two-phase
-    restatement: (1) bucket rows by a deterministic order-preserving
-    range function of the value (floor((v - min) / width)) — a pure
-    column expression, so repeated evaluation of the lineage always
-    agrees, unlike sampling-based repartitionByRange; (2) row_number
-    within each bucket; (3) add the broadcast cumulative count of all
-    earlier buckets. The only global window runs over the per-bucket
-    count table (<= num_buckets rows).
-
-    Requires ``order_col`` unique + numeric (ids); bucket skew is
-    bounded for roughly uniform ids and never worse than one bucket's
-    share of rows per task.
-    """
-    bounds = df.agg(F.min(order_col).alias("__lo__"), F.max(order_col).alias("__hi__"))
-    width = F.greatest(
-        F.lit(1).cast("double"),
-        (F.col("__hi__") - F.col("__lo__") + 1) / F.lit(float(num_buckets)),
-    )
-    bucketed = (
-        df.crossJoin(F.broadcast(bounds))
-        .withColumn("__bkt__", F.floor((F.col(order_col) - F.col("__lo__")) / width))
-        .drop("__lo__", "__hi__")
-    )
-    counts = bucketed.groupBy("__bkt__").agg(F.count(F.lit(1)).alias("__bn__"))
-    w_off = Window.orderBy("__bkt__").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "__bkt__", F.coalesce(F.sum("__bn__").over(w_off), F.lit(0)).alias("__off__")
-    )
-    w_local = Window.partitionBy("__bkt__").orderBy(order_col)
-    return (
-        bucketed.join(F.broadcast(offsets), on="__bkt__")
-        .select(
-            *df.columns,
-            (F.row_number().over(w_local) + F.col("__off__")).alias(rank_col),
-        )
-    )
 
 
 def retention_matrix(

@@ -16,8 +16,10 @@ registry needs).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .windows import bucketed_prefix_sums
 
 
 def sorted_neighborhood_block(
@@ -48,14 +50,10 @@ def sorted_neighborhood_block(
     same window; run several passes with different keys for
     multi-attribute recall (standard SNM practice).
 
-    Scale shape — no global sort, no single-partition fact window
-    (the certified ``dedup.sorted_neighborhood_pairs`` rank machinery,
-    generalized to arbitrary records/keys):
-    1. global rank by (key, id) via order-preserving PREFIX buckets:
-       row_number within each bucket + the broadcast cumulative count
-       of earlier buckets; the only global window runs over the
-       bounded per-bucket count table (raise ``prefix_len`` to split
-       hot prefixes);
+    Scale shape — no global sort, no single-partition fact window:
+    1. global rank by (key, id) via ``windows.bucketed_prefix_sums``
+       over order-preserving PREFIX buckets (the first ``prefix_len``
+       key chars; raise it to split hot prefixes);
     2. neighbor pairing as a rank-band equi-join: bands of width
        ``window``, the right side exploded into its own and the
        previous band, so every pair with rank distance < ``window``
@@ -71,29 +69,22 @@ def sorted_neighborhood_block(
     uniqueness proof for the id), so multi-pass callers that union
     candidate ids from several sort keys and join attributes once
     afterwards should opt out here rather than pay two dead joins per
-    pass.
+    pass. ``llm.dedup.sorted_neighborhood_pairs`` is such a caller.
     """
     from .caching import track_persist
 
     if window < 2:
         raise ValueError("sorted_neighborhood_block: window must be >= 2")
     key_col = F.col(key) if isinstance(key, str) else key
-    base = records.select(F.col(id_col), key_col.cast("string").alias("__key__"))
-    b = base.withColumn("__bkt__", F.substring("__key__", 1, prefix_len))
-    counts = b.groupBy("__bkt__").agg(F.count(F.lit(1)).alias("__bn__"))
-    w_off = Window.orderBy("__bkt__").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "__bkt__",
-        F.coalesce(F.sum("__bn__").over(w_off), F.lit(0)).alias("__off__"),
-    )
-    w_local = Window.partitionBy("__bkt__").orderBy("__key__", id_col)
+    b = records.select(F.col(id_col), key_col.cast("string").alias("__key__"))
     # the 16 B/record (id, rank) table feeds BOTH band-join sides;
     # unpersisted, each side replays the upstream scan + rank
     ranked = track_persist(
-        b.join(F.broadcast(offsets), on="__bkt__").select(
-            F.col(id_col),
-            (F.row_number().over(w_local) + F.col("__off__")).alias("__rk__"),
-        )
+        bucketed_prefix_sums(
+            b.withColumn("__bkt__", F.substring("__key__", 1, prefix_len)),
+            ["__key__", id_col],
+            {"__rk__": F.lit(1)},
+        ).select(id_col, "__rk__")
     )
     band = F.floor(F.col("__rk__") / F.lit(window))
     a_side = ranked.select(

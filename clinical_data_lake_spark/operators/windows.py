@@ -14,9 +14,16 @@ Scale notes: all N rolling features share ONE shuffle (the
 partitionBy(key) exchange) as long as they use the same window spec —
 the planner evaluates all window expressions over a single sort. That
 is the key trick the reference stumbled into and we keep deliberately.
+
+Global ranks and running sums (``range_buckets`` +
+``bucketed_prefix_sums``) are the package's one bucketed prefix sum:
+an unpartitioned ``Window.orderBy`` would funnel every row through a
+single task.
 """
 
 from __future__ import annotations
+
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
@@ -764,4 +771,91 @@ def shapley_attribution(
         F.coalesce("conv_touched", F.lit(0)).cast("long").alias(
             "conv_touched"
         ),
+    )
+
+
+def range_buckets(df: DataFrame, value: Column, num_buckets: int) -> DataFrame:
+    """Add ``__bkt__``: ``num_buckets`` equal-width tiles of a numeric
+    ``value`` over its broadcast [min, max] bounds,
+    ``floor((v - lo) / width)`` clamped to ``num_buckets - 1``.
+
+    The tile is a pure, monotone column expression (no sampling, so
+    every re-evaluation of the lineage agrees), which is all
+    ``bucketed_prefix_sums`` needs. Tile a descending order on the
+    negated value. All-equal values (hi == lo) land in tile 0; a NULL
+    value lands in the last tile, because ``least`` skips NULLs.
+    """
+    v = value.cast("double")
+    bounds = df.agg(F.min(v).alias("__lo__"), F.max(v).alias("__hi__"))
+    width = F.greatest(
+        (F.col("__hi__") - F.col("__lo__")) / F.lit(float(num_buckets)),
+        F.lit(1e-12),
+    )
+    return (
+        df.crossJoin(F.broadcast(bounds))
+        .withColumn(
+            "__bkt__",
+            F.least(F.floor((v - F.col("__lo__")) / width), F.lit(num_buckets - 1)),
+        )
+        .drop("__lo__", "__hi__")
+    )
+
+
+def bucketed_prefix_sums(
+    df: DataFrame,
+    order: Sequence[Column | str],
+    sums: Mapping[str, Column],
+    totals: Mapping[str, str] | None = None,
+) -> DataFrame:
+    """Global inclusive running sums over a total ``order`` without a
+    single-partition exchange of ``df``'s rows.
+
+    ``df`` must carry a ``__bkt__`` column that is monotone in
+    ``order`` (``range_buckets``, or a caller's own string-prefix
+    column). ``sums`` maps each output column to its weight: a rank is
+    the running sum of ``F.lit(1)``, an exclusive sum is the inclusive
+    sum minus the weight. ``totals`` optionally maps a ``sums`` column
+    to a column carrying that weight's grand total on every row. A
+    NULL bucket sorts first: its rows are dropped from the output, but
+    their weights count in every later sum and in the totals.
+
+    Three phases (Spark SQL, SIGMOD 2015, on why an unpartitioned
+    window is a straggler): per-bucket weight totals; their cumulative
+    offsets via the only global window, over the <= #buckets-row
+    bucket table; an in-bucket running sum (one shuffle on the bucket
+    key) plus the broadcast offset. Returns ``df``'s columns without
+    ``__bkt__``, then the ``sums`` and ``totals`` columns. ``df`` is
+    read twice; persisting it is the caller's choice.
+    """
+    totals = totals or {}
+    names = list(sums)
+    btot = df.groupBy("__bkt__").agg(
+        *[F.sum(sums[n]).alias(f"__b{i}__") for i, n in enumerate(names)]
+    )
+    by_bkt = Window.orderBy("__bkt__")
+    w_off = by_bkt.rowsBetween(Window.unboundedPreceding, -1)
+    w_all = by_bkt.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    offsets = btot.select(
+        "__bkt__",
+        *[
+            F.coalesce(F.sum(f"__b{i}__").over(w_off), F.lit(0)).alias(f"__o{i}__")
+            for i in range(len(names))
+        ],
+        *[
+            F.sum(f"__b{names.index(n)}__").over(w_all).alias(t)
+            for n, t in totals.items()
+        ],
+    )
+    w_in = (
+        Window.partitionBy("__bkt__")
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return df.join(F.broadcast(offsets), on="__bkt__").select(
+        *[c for c in df.columns if c != "__bkt__"],
+        *[
+            (F.col(f"__o{i}__") + F.sum(sums[n]).over(w_in)).alias(n)
+            for i, n in enumerate(names)
+        ],
+        *totals.values(),
     )

@@ -52,3 +52,14 @@ def test_data_column_filter_is_pushed(spark, tmp_path):
     # column pruning: the read schema carries only the needed columns
     rs = next(ln for ln in plan.splitlines() if "ReadSchema" in ln)
     assert "props" not in rs
+
+
+def test_read_table_sees_schema_of_table_rewritten_in_place(spark, tmp_path):
+    # the footer memo must not serve the first schema after an overwrite
+    root = str(tmp_path)
+    spark.createDataFrame([(1,)], "a long").write.mode("overwrite").parquet(f"{root}/t.parquet")
+    assert read_table(spark, root, "t").columns == ["a"]
+    spark.createDataFrame([(2, "x")], "a long, b string").write.mode("overwrite").parquet(
+        f"{root}/t.parquet"
+    )
+    assert [tuple(r) for r in read_table(spark, root, "t").collect()] == [(2, "x")]

@@ -1267,12 +1267,12 @@ def test_sorted_neighborhood_rank_is_bucketed_not_global(spark):
     )
     df = sorted_neighborhood_pairs(docs, window=3, threshold=0.99)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # the doc-scale row_number window is partitioned by the key-prefix
-    # bucket — never a global ORDER BY over the corpus
-    assert "row_number" in plan
-    for line in plan.splitlines():
-        if "row_number" in line:
-            assert "__bkt__" in line, line
+    # the doc-scale rank window (a running sum of 1) is partitioned by
+    # the key-prefix bucket — never a global ORDER BY over the corpus
+    ranks = [line for line in plan.splitlines() if "Window [sum(1) " in line]
+    assert ranks
+    for line in ranks:
+        assert "__bkt__" in line, line
     # near-identical template texts differing by an id token: self-pairs
     # only, none survive a 0.99 threshold
     assert df.count() == 0

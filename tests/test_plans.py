@@ -60,13 +60,13 @@ def test_case_control_rank_is_partitioned(spark):
     bucket; the only SinglePartition exchanges allowed are 1-row global
     aggregates and the <=64-row bucket-count cumsum."""
     p = _plan(spark, "cohort_case_control")
-    assert "row_number()" in p
-    # the rank window's sort includes the bucket key => partitioned rank
-    assert "__bkt__" in p
-    for frag in p.split("Window ")[1:]:
-        spec = frag.split("\n")[0]
-        if "row_number()" in spec:
-            assert "__bkt__" in spec  # partitionBy(bucket), not global
+    # the rank is a running sum of 1; its window's sort includes the
+    # bucket key => partitioned rank
+    specs = [frag.split("\n")[0] for frag in p.split("Window ")[1:]]
+    ranks = [spec for spec in specs if "sum(1)" in spec]
+    assert ranks
+    for spec in ranks:
+        assert "__bkt__" in spec  # partitionBy(bucket), not global
 
 
 def test_window_features_share_one_exchange(spark):

@@ -1,30 +1,63 @@
 """Property-based tests (hypothesis) for the operators whose edge cases
-are input-shape-dependent: distributed rank on arbitrary id sets and
-de-identification invariants. Example counts are small — every example
-is a Spark job."""
+are input-shape-dependent: the bucketed global prefix sum on arbitrary
+orders and de-identification invariants. Example counts are small —
+every example is a Spark job."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from clinical_data_lake_spark.functions.scalar import deidentify
-from clinical_data_lake_spark.operators.cohort import distributed_rank
+from clinical_data_lake_spark.operators.windows import bucketed_prefix_sums, range_buckets
 
-_ids = st.lists(
-    st.integers(min_value=-(2**40), max_value=2**40), min_size=1, max_size=60,
-    unique=True,
+# (value, key, w1, w2) per row; ids are the row positions. Small values
+# force ties, 2^40-wide ones spread the range tiles.
+_rows = st.lists(
+    st.tuples(
+        st.one_of(st.integers(-3, 3), st.integers(-(2**40), 2**40)),
+        st.text(alphabet="abc", max_size=4),
+        st.integers(0, 100),
+        st.integers(-50, 50),
+    ),
+    min_size=1,
+    max_size=40,
 )
 
 
 @settings(max_examples=12, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(vals=_ids)
-def test_distributed_rank_matches_sorted_order(spark, vals):
-    df = spark.createDataFrame([Row(x=v) for v in vals], schema="x long")
-    got = {(r.x, r["__rk__"]) for r in distributed_rank(df, "x", num_buckets=7).collect()}
-    want = {(v, i + 1) for i, v in enumerate(sorted(vals))}
+@given(rows=_rows, mode=st.sampled_from(["asc", "desc", "prefix"]))
+@example(rows=[(7, "b", 3, -1)] * 4, mode="asc")  # hi == lo
+@example(rows=[(0, "", 5, 5)], mode="desc")  # a single row
+def test_bucketed_prefix_sums_match_sorted_cumsum(spark, rows, mode):
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)], schema="id long, v long, k string, w1 long, w2 long"
+    )
+    bucketed, order, key = {
+        "asc": (range_buckets(df, F.col("v"), 7), ["v", "id"], lambda r: (r[1], r[0])),
+        "desc": (
+            range_buckets(df, -F.col("v"), 7), [F.col("v").desc(), "id"],
+            lambda r: (-r[1], r[0]),
+        ),
+        "prefix": (
+            df.withColumn("__bkt__", F.substring("k", 1, 1)), ["k", "id"],
+            lambda r: (r[2], r[0]),
+        ),
+    }[mode]
+    out = bucketed_prefix_sums(
+        bucketed, order, {"rk": F.lit(1), "s1": F.col("w1"), "s2": F.col("w2")},
+        totals={"s2": "t2"},
+    )
+    assert out.columns == df.columns + ["rk", "s1", "s2", "t2"]
+    assert dict(out.dtypes)["rk"] == "bigint"
+    got = {r.id: (r.rk, r.s1, r.s2, r.t2) for r in out.collect()}
+    want, s1, s2 = {}, 0, 0
+    for rk, r in enumerate(sorted(((i, *r) for i, r in enumerate(rows)), key=key), 1):
+        s1, s2 = s1 + r[3], s2 + r[4]
+        want[r[0]] = (rk, s1, s2, sum(w2 for *_, w2 in rows))
     assert got == want
 
 
