@@ -22,9 +22,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
-from ..operators.caching import iter_checkpoint
+from ..operators.caching import ensure_parallelism, iter_checkpoint
 from ..operators.windows import bucketed_prefix_sums, range_buckets
-from .dedup import _ensure_parallelism, _normalized
+from .dedup import _normalized
 
 
 def score_and_gate(
@@ -360,7 +360,7 @@ def dsir_weights(
         toks = F.split(_normalized(text_col), " ")
         cols = [F.col(id_col)] if with_id else []
         return (
-            _ensure_parallelism(df)
+            ensure_parallelism(df)
             .select(*cols, F.explode(toks).alias("__w__"))
             .select(
                 *([id_col] if with_id else []),
@@ -466,7 +466,7 @@ def word_symbol_table(
     Vocab-sized — every BPE iteration runs on THIS table, never on
     the corpus."""
     words = (
-        _ensure_parallelism(docs)
+        ensure_parallelism(docs)
         .select(F.explode(F.split(_normalized(text_col), " ")).alias("__w__"))
         .filter(F.col("__w__") != "")
         .groupBy("__w__")
@@ -590,7 +590,7 @@ def bpe_encode(
     ``bpe_pairs`` proxy plus the exact reference unit.
     """
     words = (
-        _ensure_parallelism(docs)
+        ensure_parallelism(docs)
         .select(F.explode(F.split(_normalized(text_col), " ")).alias("__w__"))
         .filter(F.col("__w__") != "")
         .groupBy("__w__")

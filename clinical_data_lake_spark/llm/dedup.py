@@ -27,7 +27,7 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators.caching import iter_checkpoint, track_persist
+from ..operators.caching import ensure_parallelism, iter_checkpoint, track_persist
 from ..operators.er import sorted_neighborhood_block
 
 # Mersenne prime 2^31-1 as the universal-hash modulus. The base hash
@@ -41,21 +41,6 @@ _MERSENNE = (1 << 31) - 1
 
 def _normalized(text_col: str) -> F.Column:
     return F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-
-
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Explode-heavy operators inflate rows ~10-100x downstream of the
-    scan, so scan parallelism has to be right BEFORE the explode: a
-    single small parquet file otherwise pins the shingling and the
-    map-side partial aggregation to one core. No-op when the input
-    already has enough partitions (the 100 TB case — thousands of scan
-    tasks); the repartition only pays off (and only happens) on coarse
-    inputs, where shuffling the raw docs is cheap relative to the
-    exploded work."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def _shuffle_partitions(df: DataFrame) -> int:
@@ -164,7 +149,7 @@ def word_shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     if distinct:
         arr = F.array_distinct(arr)
     return (
-        _ensure_parallelism(docs).select(F.col(id_col), toks.alias("t"))
+        ensure_parallelism(docs).select(F.col(id_col), toks.alias("t"))
         .filter(F.size("t") >= n)
         .select(id_col, F.explode(arr).alias("shingle"))
     )
@@ -433,7 +418,8 @@ def verified_near_dup_pairs(
         .distinct()
     )
     hashed = _hashed_shingles(
-        docs.join(ids, on=id_col, how="left_semi"), id_col, text_col, n
+        ensure_parallelism(docs).join(ids, on=id_col, how="left_semi"),
+        id_col, text_col, n,
     )
     doc_sets = track_persist(
         hashed.groupBy(id_col).agg(F.collect_list("shingle").alias("__shs__"))
@@ -710,7 +696,7 @@ def simhash_docs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     JVM-side. One shuffle on the doc id.
     """
     toks = (
-        _ensure_parallelism(docs)
+        ensure_parallelism(docs)
         .select(F.col(id_col), F.explode(F.split(_normalized(text_col), " ")).alias("tok"))
         .withColumn("h", F.xxhash64("tok"))
     )
@@ -1092,7 +1078,7 @@ def chunk_dedup(
     def chunk_at(i):  # chunk i = words[i*W : i*W + W], joined back with sep
         return F.array_join(F.slice(words, i * chunk_words + 1, chunk_words), sep)
 
-    light = _ensure_parallelism(docs).select(
+    light = ensure_parallelism(docs).select(
         F.col(id_col),
         F.posexplode(
             F.transform(
@@ -1305,14 +1291,11 @@ def ngram_probe_pairs(
 
     from ..operators.caching import iter_checkpoint, track_persist
 
-    # lift the scan to full parallelism ONCE, for every subtree: the
-    # operator builds several corpus-derived branches (match slice,
-    # size projection, broadcast builds) and on a coarse input each
-    # would otherwise run its text-heavy row work single-threaded in
-    # sequence (broadcast builds serialize) — measured 13s -> ~4s at
-    # sf0.1 on a 1-file corpus
-    corpus = _ensure_parallelism(corpus)
-    probe = _ensure_parallelism(probe)
+    # floored ONCE for every corpus-derived branch below (match slice,
+    # size projection, broadcast builds) — measured 13s -> ~4s at sf0.1
+    # on a 1-file corpus
+    corpus = ensure_parallelism(corpus)
+    probe = ensure_parallelism(probe)
 
     # probe shingles and the match table are both small (probe-batch /
     # match-pair sized) but their LINEAGES contain the corpus explode;
@@ -1597,7 +1580,7 @@ def dedup_span_removal(
 
     toks = F.split(_normalized(text_col), " ")
     base = track_persist(
-        _ensure_parallelism(docs).select(F.col(id_col), toks.alias("t"))
+        ensure_parallelism(docs).select(F.col(id_col), toks.alias("t"))
     )
     win = F.greatest(F.size("t") - (n - 1), F.lit(0))
     zipped = F.arrays_zip(*[F.slice("t", j + 1, win) for j in range(n)])
@@ -2412,7 +2395,7 @@ def incremental_admission_fold(
             break  # the last round's ledger tables have no consumer
         acc_ids = dec.filter(F.col("decision") == "accept").select(id_col)
         acc = track_persist(
-            b.select(F.col(id_col), F.col(text_col)).join(
+            ensure_parallelism(b.select(F.col(id_col), F.col(text_col))).join(
                 acc_ids, on=id_col, how="left_semi"
             )
         )

@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators.caching import track_persist
+from ..operators.caching import ensure_parallelism, track_persist
 
 
 def _as_double(col: str | Column) -> Column:
@@ -1143,16 +1143,11 @@ def silhouette_simplified(
         # look like d one-dimensional points.
         base = base.withColumn("vec_id", F.monotonically_increasing_id())
     # the posexplode inflates rows ~dim x and the broadcast join below
-    # multiplies them again by the label count; a single-file scan
-    # would pin all of it to one core (measured: the per-(point, label)
-    # residual aggregate ran 3.5 s on ONE task at sf0.1) — lift the
-    # scan to full parallelism first (no-op on a real multi-split scan;
-    # safe before the mono-id fallback: ids stay unique per point and
-    # only ever group a point's own rows)
-    target = base.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < target:
-        base = base.repartition(target)
-    pts = base.select(
+    # multiplies them again by the label count (measured: the
+    # per-(point, label) residual aggregate ran 3.5 s on ONE task at
+    # sf0.1). A fallback id is minted before the floor, so it stays
+    # unique per point and only ever groups that point's own rows.
+    pts = ensure_parallelism(base).select(
         "vec_id",
         F.col(label_col),
         F.posexplode(_as_double(vec_col)).alias("pos", "val"),

@@ -22,6 +22,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.caching import ensure_parallelism
 from ..operators.windows import bucketed_prefix_sums, range_buckets
 
 
@@ -612,15 +613,10 @@ def corr_matrix(
     rounded inputs — one reduction, no per-pair passes, no driver
     loops. The 1-row moment vector unpivots engine-side via explode.
     """
-    from ..llm.dedup import _ensure_parallelism
-
     cs = list(cols)
-    # the per-row work (k rounds + k(k+3)/2 decimal products) is far
-    # heavier than the scan; on coarse inputs (a few parquet files) the
-    # scan partitioning would pin it to a few cores — repartition the
-    # narrow projection first (no-op at cluster scale where scans
-    # already fan out). Measured 9.0s -> 2.5s at sf0.1 on local[32].
-    clean = _ensure_parallelism(df.select(*cs).na.drop(subset=cs))
+    # k rounds + k(k+3)/2 decimal products per row: floor the narrow
+    # projection first
+    clean = ensure_parallelism(df.select(*cs).na.drop(subset=cs))
     # per-row terms cast to decimal(18,6) — long-backed, ~2x faster to
     # aggregate than decimal(28,6) (measured 2.2s -> 1.0s for 4 sums at
     # sf0.1); Spark widens the SUM accumulator to (28,6) automatically,
@@ -1250,18 +1246,12 @@ def poisson_bootstrap_mean(
     for k in range(len(POISSON1_CDF) - 1, -1, -1):
         w = F.when(u <= F.lit(POISSON1_CDF[k]), F.lit(k)).otherwise(w)
     x = F.col("__x__")
-    # the explode inflates rows n_boot x: a coarse scan (one small
-    # parquet file) would otherwise pin all n x n_boot md5 evaluations
-    # to one core — lift the NARROW (id, value) projection to full
-    # parallelism first (no-op on an already-parallel 100 TB scan)
+    # the explode inflates rows n_boot x: floor the narrow projection
     narrow = df.select(
         F.col(id_col), F.col(value_col).cast("decimal(18,6)").alias("__x__")
     )
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if narrow.rdd.getNumPartitions() < target:
-        narrow = narrow.repartition(target)
     rep = (
-        narrow.select(F.col(id_col), "__x__", grp)
+        ensure_parallelism(narrow).select(F.col(id_col), "__x__", grp)
         .select(
             "__x__",
             "__grp__",
@@ -1515,14 +1505,7 @@ def mahalanobis2(
     """
     x = F.col(x_col).cast("double")
     y = F.col(y_col).cast("double")
-    # the 6-aggregate decimal pass would otherwise run on the scan's
-    # partitioning — a few-file sf0.1 input pins it to a few cores
-    # (the corr_matrix lesson); lift the NARROW 2-column projection to
-    # full parallelism first (no-op on an already-parallel scan)
-    narrow = df.select(x.alias("__px__"), y.alias("__py__"))
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if narrow.rdd.getNumPartitions() < target:
-        narrow = narrow.repartition(target)
+    narrow = ensure_parallelism(df.select(x.alias("__px__"), y.alias("__py__")))
     px, py = F.col("__px__"), F.col("__py__")
     stats = narrow.agg(
         F.count(F.lit(1)).cast("long").alias("__n__"),
@@ -2280,8 +2263,9 @@ def permutation_test(
 
     Scale shape: same as the bootstrap — explode n x n_perm, collapse
     immediately through a map-side-combinable groupBy(b); shuffle
-    volume is n_perm x partitions. The narrow projection lifts to
-    full parallelism first so a coarse scan cannot pin the hashing.
+    volume is n_perm x partitions. The narrow projection is floored
+    first (``ensure_parallelism``) so a coarse scan cannot pin the
+    hashing.
     """
     g = F.col(group_col).cast("boolean")
     base = df.select(
@@ -2307,10 +2291,7 @@ def permutation_test(
         F.round(n1 / nn, 9).alias("__p1__"),
         d_obs.alias("__dobs__"),
     )
-    target = df.sparkSession.sparkContext.defaultParallelism
-    narrow = base.select("__id__", "__x__")
-    if narrow.rdd.getNumPartitions() < target:
-        narrow = narrow.repartition(target)
+    narrow = ensure_parallelism(base.select("__id__", "__x__"))
     # r15: same two-stage explode as poisson_bootstrap_mean — one md5
     # per (row, 4-replicate hash group) instead of one per replicate;
     # every u bit-identical (same hash string, same slot arithmetic)
@@ -2491,13 +2472,7 @@ def ols2(
     # wide decimals (Spark widens the sum accumulator itself); the
     # squared terms stay far inside 1e12 for price-scale data
     d6, d28 = "decimal(18,6)", "decimal(18,6)"
-    # lift the narrow projection to full parallelism first: a coarse
-    # 3-file scan would pin all ten decimal aggregates to 3 cores (the
-    # corr_matrix lesson; no-op on a real multi-split scan)
-    df = df.select(group_col, y_col, x1_col, x2_col)
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
+    df = ensure_parallelism(df.select(group_col, y_col, x1_col, x2_col))
     g = df.groupBy(F.col(group_col).alias("grp")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(x1.cast(d6)).alias("__s1__"),
@@ -2988,13 +2963,7 @@ def weighted_corr(
     base = df.select(*gcols, x_col, y_col, w_col).filter(
         x.isNotNull() & y.isNotNull() & w.isNotNull() & (w > 0)
     )
-    # lift the narrow projection to full parallelism: a coarse 3-file
-    # scan pins the six decimal aggregates to 3 cores (the
-    # corr_matrix/ols2 lesson; no-op on real multi-split scans)
-    target = base.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < target:
-        base = base.repartition(target)
-    mom = base.groupBy(*gcols).agg(
+    mom = ensure_parallelism(base).groupBy(*gcols).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(w.cast(d6)).alias("__sw__"),
         F.sum((w * x).cast(d6)).alias("__swx__"),
@@ -3053,12 +3022,7 @@ def partial_corr(
     base = df.select(*gcols, x_col, y_col, z_col).filter(
         x.isNotNull() & y.isNotNull() & z.isNotNull()
     )
-    # coarse-scan guard: nine decimal aggregates want all cores (the
-    # corr_matrix/ols2 lesson; no-op on real multi-split scans)
-    target = base.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < target:
-        base = base.repartition(target)
-    mom = base.groupBy(*gcols).agg(
+    mom = ensure_parallelism(base).groupBy(*gcols).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(x.cast(d6)).alias("__sx__"),
         F.sum(y.cast(d6)).alias("__sy__"),

@@ -446,7 +446,8 @@ def gini_concentration(
 
     with ranks 1..n ascending by (value, id). Tie order between equal
     values cannot change the sum, so any consistent total order gives
-    the exact statistic.
+    the exact statistic. NULL values are ignored, as SQL aggregates
+    ignore them.
 
     Scale shape: global ranks are running sums of 1 from
     ``windows.bucketed_prefix_sums`` over value range tiles — no
@@ -454,7 +455,9 @@ def gini_concentration(
     products sum as decimals, so the one-row reduction is exact at any
     count.
     """
-    vals = df.select(F.col(id_col).alias("__id__"), F.col(value_col).cast("double").alias("__x__"))
+    vals = df.select(
+        F.col(id_col).alias("__id__"), F.col(value_col).cast("double").alias("__x__")
+    ).filter(F.col("__x__").isNotNull())
     ranked = bucketed_prefix_sums(
         range_buckets(vals, F.col("__x__"), num_buckets),
         ["__x__", "__id__"],
@@ -947,8 +950,8 @@ def lorenz_curve(
 ) -> DataFrame:
     """Lorenz-curve points — ``gini_concentration``'s plottable
     companion: for k = 1..n_points, the share of total value held by
-    the bottom floor(k*n/n_points) entities ranked ascending. One row
-    per point:
+    the bottom floor(k*n/n_points) entities ranked ascending (NULL
+    values ignored, as in ``gini_concentration``). One row per point:
 
         (point, n_entities, cum_value, value_share)
 
@@ -965,7 +968,7 @@ def lorenz_curve(
     vals = df.select(
         F.col(id_col).alias("__id__"),
         F.col(value_col).cast("double").alias("__x__"),
-    )
+    ).filter(F.col("__x__").isNotNull())
     ranked = bucketed_prefix_sums(
         range_buckets(vals, F.col("__x__"), num_buckets),
         ["__x__", "__id__"],

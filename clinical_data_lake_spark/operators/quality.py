@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .windows import range_buckets
+
 
 def not_null(col: str) -> Column:
     """Expectation: ``col`` is never NULL."""
@@ -383,18 +385,7 @@ def sequence_gaps(
                 (F.col("__nx__") - F.col("__v__") - 1).alias("gap_len"),
             )
         )
-    bounds = vals.agg(F.min("__v__").alias("__lo__"), F.max("__v__").alias("__hi__"))
-    width = F.greatest(
-        ((F.col("__hi__") - F.col("__lo__") + 1) / F.lit(float(num_buckets))),
-        F.lit(1.0),
-    )
-    bucketed = vals.crossJoin(F.broadcast(bounds)).select(
-        "__v__",
-        F.least(
-            F.floor((F.col("__v__") - F.col("__lo__")) / width),
-            F.lit(num_buckets - 1),
-        ).alias("__bkt__"),
-    )
+    bucketed = range_buckets(vals, F.col("__v__"), num_buckets)
     w_in = Window.partitionBy("__bkt__").orderBy("__v__")
     in_bucket = bucketed.select(
         "__v__", F.lead("__v__").over(w_in).alias("__nx__")

@@ -19,8 +19,10 @@ the raw events twice.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .caching import ensure_parallelism
 
 
 def resample_daily(
@@ -512,6 +514,70 @@ def cusum_changepoint(
     )
 
 
+def _series_pairs(
+    events: DataFrame,
+    key_col: str,
+    x_col: str,
+    y_col: str,
+    max_points: int,
+    caller: str,
+    id_col: str | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The within-key pair join behind ``theil_sen``, ``mann_kendall``
+    and ``kendall_tau``. Returns ``(base, counts, pairs)``:
+
+    - ``base``: (key, __x__, __y__[, __i__]), x and y as doubles, rows
+      with a NULL x or y dropped;
+    - ``counts``: (key, __n__), points per key;
+    - ``pairs``: (key, __xa__, __ya__[, __ia__], __xb__, __yb__[, __ib__])
+      for every ordered pair of points within a key, self-pairs
+      included; the caller filters to the pairs it counts.
+
+    The join is quadratic per key, so ``max_points`` guards it in-plan,
+    not with a pre-flight job: ``counts`` joins onto the left input
+    (co-partitioned, both sides shuffle on the key) and gates the x
+    value itself with raise_error, so an oversized series fails loudly
+    from the same single job, and building the plan launches NO Spark
+    jobs. The guard rides a column the join consumes; an unused assert
+    column would be pruned out of the plan by Catalyst.
+
+    Only the pair-join input gets the parallelism floor: ``base``'s
+    other consumers (counts, medians, tie groups) are map-side
+    combinable aggregates that do not need it.
+    """
+    ids = [F.col(id_col).alias("__i__")] if id_col else []
+    base = events.select(
+        F.col(key_col),
+        F.col(x_col).cast("double").alias("__x__"),
+        F.col(y_col).cast("double").alias("__y__"),
+        *ids,
+    ).filter(F.col("__x__").isNotNull() & F.col("__y__").isNotNull())
+    counts = base.groupBy(key_col).agg(F.count(F.lit(1)).alias("__n__"))
+    guard_msg = F.concat(
+        F.lit(
+            f"{caller}: series over {max_points} points (pair join is "
+            f"quadratic per series); bucket or sample x first, or raise "
+            f"max_points; offending key: "
+        ),
+        F.col(key_col).cast("string"),
+    )
+    side = ensure_parallelism(base)
+
+    def leg(s: str) -> list[Column]:  # y (and id) renamed per side
+        cols = ["y", "i"] if id_col else ["y"]
+        return [F.col(f"__{c}__").alias(f"__{c}{s}__") for c in cols]
+
+    a = side.join(counts, on=key_col).select(
+        key_col,
+        F.when(F.col("__n__") <= F.lit(max_points), F.col("__x__"))
+        .otherwise(F.raise_error(guard_msg))
+        .alias("__xa__"),
+        *leg("a"),
+    )
+    b = side.select(key_col, F.col("__x__").alias("__xb__"), *leg("b"))
+    return base, counts, a.join(b, on=key_col)
+
+
 def theil_sen(
     events: DataFrame,
     key_col: str,
@@ -535,47 +601,11 @@ def theil_sen(
     run per key. Not for million-point series — for those, bucket the
     x-axis first or use OLS.
     """
-    base = events.select(
-        F.col(key_col),
-        F.col(x_col).cast("double").alias("__x__"),
-        F.col(y_col).cast("double").alias("__y__"),
-    ).filter(F.col("__x__").isNotNull() & F.col("__y__").isNotNull())
-    # a coarse single-file scan otherwise pins every map-side cost —
-    # the pair join's shuffle write and the per-key aggregate buffers —
-    # to one core (r16, profiled: a 1-task 2.8 s stage fed the whole
-    # query). No-op on an already-parallel scan (the 100 TB case).
-    target = events.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < target:
-        base = base.repartition(target)
-    counts = base.groupBy(key_col).agg(F.count(F.lit(1)).alias("__n__"))
-    # In-plan guard, not a pre-flight job: the per-key count joins
-    # onto the pair join's left input (co-partitioned — both sides
-    # already shuffle on the key) and gates the x value itself with
-    # raise_error, so an oversized series fails loudly from the same
-    # single job and the hot path never scans the input twice.
-    # Calling this function launches NO Spark jobs (plan-locked in
-    # tests/test_r8_trend_ops.py). The guard rides a column the join
-    # actually consumes — an unused assert column would be pruned out
-    # of the plan by Catalyst.
-    guard_msg = F.concat(
-        F.lit(
-            f"theil_sen: series over {max_points} points (pair join is "
-            f"quadratic per series); bucket x first or raise max_points; "
-            f"offending key: "
-        ),
-        F.col(key_col).cast("string"),
+    base, _, pairs = _series_pairs(
+        events, key_col, x_col, y_col, max_points, "theil_sen"
     )
-    a = base.join(counts, on=key_col).select(
-        key_col,
-        F.when(F.col("__n__") <= F.lit(max_points), F.col("__x__"))
-        .otherwise(F.raise_error(guard_msg))
-        .alias("__xa__"),
-        F.col("__y__").alias("__ya__"),
-    )
-    b = base.select(key_col, F.col("__x__").alias("__xb__"), F.col("__y__").alias("__yb__"))
     slopes = (
-        a.join(b, on=key_col)
-        .filter(F.col("__xa__") < F.col("__xb__"))
+        pairs.filter(F.col("__xa__") < F.col("__xb__"))
         .select(
             key_col,
             (
@@ -636,38 +666,11 @@ def mann_kendall(
     Returns (key, n, s_stat, var_s, z); series with n < 2 or zero
     variance yield NULL z.
     """
-    base = events.select(
-        F.col(key_col),
-        F.col(x_col).cast("double").alias("__x__"),
-        F.col(y_col).cast("double").alias("__y__"),
-    ).filter(F.col("__x__").isNotNull() & F.col("__y__").isNotNull())
-    # a coarse single-file scan otherwise pins every map-side cost —
-    # the pair join's shuffle write and the per-key aggregate buffers —
-    # to one core (r16, profiled: a 1-task 2.8 s stage fed the whole
-    # query). No-op on an already-parallel scan (the 100 TB case).
-    target = events.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < target:
-        base = base.repartition(target)
-    counts = base.groupBy(key_col).agg(F.count(F.lit(1)).alias("__n__"))
-    guard_msg = F.concat(
-        F.lit(
-            f"mann_kendall: series over {max_points} points (pair join "
-            f"is quadratic per series); bucket x first or raise "
-            f"max_points; offending key: "
-        ),
-        F.col(key_col).cast("string"),
+    base, counts, pairs = _series_pairs(
+        events, key_col, x_col, y_col, max_points, "mann_kendall"
     )
-    a = base.join(counts, on=key_col).select(
-        key_col,
-        F.when(F.col("__n__") <= F.lit(max_points), F.col("__x__"))
-        .otherwise(F.raise_error(guard_msg))
-        .alias("__xa__"),
-        F.col("__y__").alias("__ya__"),
-    )
-    b = base.select(key_col, F.col("__x__").alias("__xb__"), F.col("__y__").alias("__yb__"))
     s_tab = (
-        a.join(b, on=key_col)
-        .filter(F.col("__xa__") < F.col("__xb__"))
+        pairs.filter(F.col("__xa__") < F.col("__xb__"))
         .groupBy(key_col)
         .agg(
             F.sum(F.signum(F.col("__yb__") - F.col("__ya__")).cast("long"))
@@ -876,41 +879,14 @@ def kendall_tau(
     Unique ``id_col`` orders pairs so each unordered pair is counted
     exactly once.
     """
-    base = events.select(
-        F.col(key_col),
-        F.col(x_col).cast("double").alias("__x__"),
-        F.col(y_col).cast("double").alias("__y__"),
-        F.col(id_col).alias("__i__"),
-    ).filter(F.col("__x__").isNotNull() & F.col("__y__").isNotNull())
-    counts = base.groupBy(key_col).agg(F.count(F.lit(1)).alias("__n__"))
-    guard_msg = F.concat(
-        F.lit(
-            f"kendall_tau: series over {max_points} points (pair join is "
-            f"quadratic per series); sample first or raise max_points; "
-            f"offending key: "
-        ),
-        F.col(key_col).cast("string"),
-    )
-    a = base.join(counts, on=key_col).select(
-        key_col,
-        F.when(F.col("__n__") <= F.lit(max_points), F.col("__x__"))
-        .otherwise(F.raise_error(guard_msg))
-        .alias("__xa__"),
-        F.col("__y__").alias("__ya__"),
-        F.col("__i__").alias("__ia__"),
-    )
-    b = base.select(
-        key_col,
-        F.col("__x__").alias("__xb__"),
-        F.col("__y__").alias("__yb__"),
-        F.col("__i__").alias("__ib__"),
+    _, counts, pairs = _series_pairs(
+        events, key_col, x_col, y_col, max_points, "kendall_tau", id_col
     )
     dx = F.col("__xb__") - F.col("__xa__")
     dy = F.col("__yb__") - F.col("__ya__")
     prod = dx * dy
     pairs = (
-        a.join(b, on=key_col)
-        .filter(F.col("__ia__") < F.col("__ib__"))
+        pairs.filter(F.col("__ia__") < F.col("__ib__"))
         .select(
             key_col,
             (prod > 0).cast("long").alias("__c__"),

@@ -21,9 +21,6 @@ The rules encode this package's design invariants:
   idiom.
 - ``no-pushed-filters``: a parquet scan whose filters did not reach
   the reader (full-file decode for a filtered query).
-- ``wide-scan``: a parquet scan reading every column while the query
-  uses few — column pruning failed (often a ``select('*')`` kept
-  upstream).
 """
 
 from __future__ import annotations

@@ -2,7 +2,35 @@
 
 from __future__ import annotations
 
-from clinical_data_lake_spark.operators.caching import cache_if, scoped_cache
+import itertools
+from contextlib import contextmanager
+
+from pyspark.sql import functions as F
+
+from clinical_data_lake_spark.operators.caching import (
+    cache_if,
+    ensure_parallelism,
+    scoped_cache,
+)
+
+from conftest import SF_ORACLE
+
+_GROUPS = itertools.count()
+
+
+@contextmanager
+def _jobs_launched(spark):
+    """Yield a list that holds, after the block, the ids of the Spark
+    jobs the block launched."""
+    sc = spark.sparkContext
+    group = f"caching_probe_{next(_GROUPS)}"
+    jobs: list[int] = []
+    sc.setJobGroup(group, "plan-build probe")
+    try:
+        yield jobs
+    finally:
+        sc.setJobGroup("", "")
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_scoped_cache_persists_and_releases(spark):
@@ -93,3 +121,60 @@ def test_release_persisted_reclaims_operator_caches(spark):
     after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
     assert after <= before, f"leaked persisted RDDs: {after - before}"
     assert release_persisted() == 0  # idempotent
+
+
+def test_ensure_parallelism_floors_a_single_partition_scan(spark):
+    target = spark.sparkContext.defaultParallelism
+    one = spark.read.parquet(f"{SF_ORACLE}/documents.parquet").coalesce(1)
+    with _jobs_launched(spark) as jobs:
+        out = ensure_parallelism(one)
+    assert jobs == []
+    assert out.rdd.getNumPartitions() >= target
+    assert out.count() == one.count()
+
+
+def test_ensure_parallelism_runs_no_job_on_a_shuffled_input(spark):
+    """A shuffled frame keeps its plan; reading its split count would
+    run the stages beneath it (AQE), here the groupBy and the cached
+    aggregate."""
+    docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
+    grouped = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
+    cached = grouped.cache()
+    try:
+        over_cache = cached.filter("n > 0")
+        with _jobs_launched(spark) as jobs:
+            assert ensure_parallelism(grouped) is grouped
+            assert ensure_parallelism(over_cache) is over_cache
+        assert jobs == []
+    finally:
+        cached.unpersist()
+
+
+def test_word_shingles_over_groupby_output_runs_no_job(spark):
+    from clinical_data_lake_spark.llm.dedup import word_shingles
+
+    docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
+    per_lang = docs.groupBy(F.col("lang").alias("doc_id")).agg(
+        F.concat_ws(" ", F.collect_list("text")).alias("text")
+    )
+    with _jobs_launched(spark) as jobs:
+        word_shingles(per_lang)
+    assert jobs == []
+
+
+def test_verified_minhash_pipeline_builds_without_running(spark):
+    """Building the candidate -> verify plan runs nothing; the floor
+    used to run the whole candidate pipeline at build time."""
+    from clinical_data_lake_spark.llm.dedup import (
+        minhash_lsh_pairs,
+        verified_near_dup_pairs,
+    )
+    from clinical_data_lake_spark.operators.caching import release_persisted
+
+    docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
+    try:
+        with _jobs_launched(spark) as jobs:
+            verified_near_dup_pairs(docs, minhash_lsh_pairs(docs))
+        assert jobs == []
+    finally:
+        release_persisted()

@@ -266,6 +266,25 @@ def test_gini_tie_order_invariant(spark):
     assert g1 == g2 == pytest.approx(ref, abs=1e-6)
 
 
+def test_gini_and_lorenz_ignore_null_values(spark):
+    """NULL values drop before ranking, as SQL aggregates ignore them;
+    unfiltered they landed in the last range tile and counted in n."""
+    from clinical_data_lake_spark.operators.aggregates import (
+        gini_concentration,
+        lorenz_curve,
+    )
+
+    df = spark.createDataFrame(
+        [(1, 1.0), (2, 2.0), (3, 3.0), (4, None), (5, None)], "id int, x double"
+    )
+    r = gini_concentration(df, "x", "id").head()
+    assert r.n == 3 and r.total == 6.0
+    assert r.gini == pytest.approx(0.222222, abs=1e-9)
+    pts = lorenz_curve(df, "x", "id", n_points=3).orderBy("point").collect()
+    assert [p.n_entities for p in pts] == [3, 3, 3]
+    assert [p.cum_value for p in pts] == [1.0, 3.0, 6.0]
+
+
 def test_quantile_normalize_closed_form_and_plan(spark):
     from clinical_data_lake_spark.ml.featurize import quantile_normalize
 

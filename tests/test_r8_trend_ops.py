@@ -73,3 +73,22 @@ def test_ab_test_closed_form(spark):
                                   "arm string, converted int"),
             "arm", "converted",
         )
+
+
+@pytest.mark.parametrize("name", ["theil_sen", "mann_kendall", "kendall_tau"])
+def test_pair_join_floor_shuffles_its_input_once(spark, name):
+    """Only the pair-join input is floored, so the executed plan runs
+    at most one RoundRobin shuffle (its second leg reuses it); the
+    floor on the whole series table ran one per consumer."""
+    import re
+
+    from conftest import SF_ORACLE
+
+    from clinical_data_lake_spark.driver_queries import QUERIES
+
+    df = QUERIES[name](spark, SF_ORACLE)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    rr = re.findall(r"^[\s:+\-*()\d]*Exchange RoundRobinPartitioning", final, re.M)
+    assert len(rr) <= 1, final
